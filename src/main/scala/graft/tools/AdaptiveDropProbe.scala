@@ -15,9 +15,8 @@ import graft.rpt.{AdaptiveProbe, RptConf}
  *  - WEAK: a LIKE / computed predicate that happens to keep every row —
  *    selective-LOOKING and unpriceable by footer stats, so every
  *    planning-time gate admits the build, the spliced probe keeps ~100%,
- *    and the per-row hash+bloom pays for nothing. Cross-query feedback
- *    only helps the NEXT run; the drop should recover most of the probe
- *    cost on THIS run.
+ *    and the per-row hash+bloom pays for nothing. The drop should
+ *    recover most of the probe cost on THIS run.
  *  - STRONG: a top-~1% `o_totalprice` band — the probe cuts ~99% of
  *    lineitem. The drop must never fire here; its two counter
  *    increments per sampled row must not measurably slow the probe.

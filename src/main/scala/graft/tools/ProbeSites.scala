@@ -69,11 +69,6 @@ object ProbeSites {
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
         val rows = queries.map { case (name, sql) =>
           spark.conf.set("spark.graft.rpt.enabled", "true")
-          // the census classifies the probe site's OWN static predicates;
-          // rule-injected literal min/max range conjuncts would read as a
-          // user filter and bias the filtered-site measurement, so the
-          // sweep pins that channel off (it is also the default)
-          spark.conf.set("spark.graft.rpt.literalBounds", "false")
           val plan = spark.sql(sql).queryExecution.optimizedPlan
           // each probe site: a Filter whose condition carries a BF probe;
           // PhysicalOperation peels it down to the scanned leaf

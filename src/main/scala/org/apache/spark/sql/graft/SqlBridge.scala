@@ -1,6 +1,5 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
 import org.apache.spark.storage.StorageLevel
@@ -8,8 +7,8 @@ import org.apache.spark.storage.StorageLevel
 /**
  * Minimal bridge into `private[sql]` surface for the graft RPT rule's
  * two-phase features. The reference engine executes its CREATE_BF builds
- * mid-pipeline and feeds measured facts (cardinalities, min/max bounds)
- * back into the plan (reference: src/operators/physical_create_bf.cpp:
+ * mid-pipeline and feeds measured facts (cardinalities) back into the
+ * plan (reference: src/operators/physical_create_bf.cpp:
  * 352-419); the Spark analog is executing a small auxiliary plan during
  * optimization. Spark has no public "run this LogicalPlan" API, hence this
  * one-file package bridge — everything else in graft uses public APIs.
@@ -18,13 +17,9 @@ object SqlBridge {
 
   private def active: SparkSession = SparkSession.active
 
-  /** Execute `plan` on the active session and collect its rows. The caller
-   *  is responsible for re-entrancy guarding (the nested execution runs the
-   *  full optimizer, including the calling rule). */
-  def collectRows(plan: LogicalPlan): Array[Row] =
-    Dataset.ofRows(active, plan).collect()
-
-  /** Count rows of `plan` (aggregate pushdown / column pruning apply). */
+  /** Count rows of `plan` (aggregate pushdown / column pruning apply). The
+   *  caller is responsible for re-entrancy guarding (the nested execution
+   *  runs the full optimizer, including the calling rule). */
   def countRows(plan: LogicalPlan): Long =
     Dataset.ofRows(active, plan).count()
 

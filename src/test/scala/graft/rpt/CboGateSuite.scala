@@ -6,7 +6,7 @@ import graft.SparkTestBase
  * CBO-stats path of the keep-fraction build gate: with
  * `spark.sql.cbo.enabled` and ANALYZE'd column statistics, a weakly-
  * selective build stands down from the filter ESTIMATE alone — no
- * planning-time count jobs (the runtimeSizedBuilds path) needed.
+ * planning-time count jobs needed.
  * Also pins the trust guard: CBO without column stats must change
  * nothing, because FilterEstimation assumes unestimatable predicates
  * keep 100% of rows.
@@ -76,10 +76,11 @@ class CboGateSuite extends SparkTestBase {
         |JOIN supplier ON l_suppkey = s_suppkey
         |JOIN nation ON s_nationkey = n_nationkey
         |WHERE n_name = 'NATION_3' AND s_acctbal > -999999""".stripMargin
+    // supplier's keep-everything range is priced by the default-path
+    // footer estimate (FOOTER_KEEP_GATE is on by default)
     withConf(RptConf.ENABLED -> "true",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       RptConf.MIN_PROBE_ROWS -> "0",
-      RptConf.RUNTIME_SIZED_BUILDS -> "true",
       RptConf.MAX_BUILD_KEEP_FRACTION -> "0.8") {
       assert(!buildTables(chain).contains("supplier"),
         "weak supplier build must stand down under the keep-fraction gate")

@@ -119,8 +119,8 @@ class TransferPropertySuite extends SparkTestBase {
     // barrier units (union / global aggregate / window) with a JOIN nested
     // INSIDE them — the shape where splice() must reach units inside a
     // barrier subtree and where cacheBuilds must decline to cache the
-    // barrier (nested-unit exclusion). Swept against every two-phase
-    // feature: cached builds, literal bounds, runtime-sized builds.
+    // barrier (nested-unit exclusion). Swept against the two-phase
+    // cached-builds feature.
     val params = Gen.Parameters.default
     val instances = (200 to 209).flatMap(i => genInstance(params, Seed(i.toLong)))
       .filter(_.dimRows.size >= 3)
@@ -128,11 +128,7 @@ class TransferPropertySuite extends SparkTestBase {
     val barriers = Seq("union", "agg", "window")
     val variants: Seq[(String, Seq[(String, String)])] = Seq(
       "plain" -> Seq.empty,
-      "cacheBuilds" -> Seq(RptConf.CACHE_BUILDS -> "true"),
-      "literalBounds" -> Seq(RptConf.LITERAL_BOUNDS -> "true",
-        RptConf.FILTER_TYPE -> "all"),
-      "runtimeSized" -> Seq(RptConf.RUNTIME_SIZED_BUILDS -> "true",
-        RptConf.RUNTIME_SIZING_MIN_ROWS -> "0"))
+      "cacheBuilds" -> Seq(RptConf.CACHE_BUILDS -> "true"))
     instances.zipWithIndex.foreach { case (inst, idx) =>
       buildViews(inst)
       val r = inst.keyRange
@@ -181,11 +177,8 @@ class TransferPropertySuite extends SparkTestBase {
         (RptConf.FILTER_TYPE -> "all"): _*)(fingerprint(spark.sql(sql)))
       val fwd = withConf(openGates :+ (RptConf.ENABLED -> "true") :+
         (RptConf.PASS_MODE -> "forwardOnly"): _*)(fingerprint(spark.sql(sql)))
-      val cascade = withConf(openGates :+ (RptConf.ENABLED -> "true") :+
-        (RptConf.BUILD_FORM -> "cascade"): _*)(fingerprint(spark.sql(sql)))
       assert(mm == off, s"filterType=all changed results for: $inst")
       assert(fwd == off, s"forwardOnly changed results for: $inst")
-      assert(cascade == off, s"buildForm=cascade changed results for: $inst")
     }
   }
 }
